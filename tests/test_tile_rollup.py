@@ -183,6 +183,18 @@ class TestTileCountsIncremental:
         assert not os.path.exists(os.path.join(sd, "counts-s1"))
         assert os.path.exists(os.path.join(sd, "counts-s2"))
 
+    def test_level_change_after_append_leaves_one_state_dir(self, spark, tmp_path):
+        # the rebuild after a tiling change must still remove the dir the
+        # previous state.json pointed at, not orphan it
+        st = SnapshotStore(spark, str(tmp_path / "tbl"))
+        sd = str(tmp_path / "state")
+        st.commit(_pts(spark, 0, 1000), created_unix=10, n_partitions=2)
+        tile_counts_incremental(spark, st, sd, level=4, bits=BITS)
+        st.commit(_pts(spark, 1000, 2000), created_unix=20, n_partitions=2)
+        got = tile_counts_incremental(spark, st, sd, level=6, bits=BITS)
+        assert _rows(got) == _rows(tile_counts(_pts(spark, 0, 2000), 6, bits=BITS))
+        assert [d for d in os.listdir(sd) if d.startswith("counts-s")] == ["counts-s2"]
+
 
 class TestStreamingIngestToRollup:
     def test_stream_commits_then_incremental_refresh(self, spark, tmp_path):

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from ..functions.columns import interval_filter
 from ..plans.decompose import Interval, coalesce_intervals, decompose_box
+from ..util import local_df
 
 
 def box_refine_predicate(cols: list[str], mins, maxs) -> Column:
@@ -211,7 +212,7 @@ def intervals_df(spark, boxes, bits: int = 30, budget: int = 64) -> DataFrame:
     for b in boxes:
         for iv in decompose_box(tuple(b["mins"]), tuple(b["maxs"]), bits=bits, budget=budget):
             rows.append((int(b["qid"]), iv.lo, iv.hi, iv.solid))
-    return spark.createDataFrame(rows, "qid long, lo long, hi long, solid boolean")
+    return local_df(spark, rows, "qid long, lo long, hi long, solid boolean")
 
 
 def bucketed_intervals_df(
@@ -246,12 +247,8 @@ def bucketed_intervals_df(
         for iv in ivs:
             for bucket in range(iv.lo >> bucket_shift, (iv.hi >> bucket_shift) + 1):
                 rows.append((int(b["qid"]), iv.lo, iv.hi, iv.solid, bucket))
-    # Arrow path (pandas) — plain-list createDataFrame serializes row by
-    # row through Py4J, a measurable driver cost at 10^3-10^4 intervals
-    import pandas as pd
-
-    pdf = pd.DataFrame(rows, columns=["qid", "lo", "hi", "solid", "bucket"])
-    df = spark.createDataFrame(pdf, "qid long, lo long, hi long, solid boolean, bucket long")
+    # Arrow LocalRelation via util.local_df: no pickled Python RDD
+    df = local_df(spark, rows, "qid long, lo long, hi long, solid boolean, bucket long")
     return df, bucket_shift
 
 

@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 
 from ..plans.decompose import decompose_box
 from ..sources.points import boxes_df
+from ..util import local_df
 from .bbox import bbox_join_bucketed, bucketed_intervals_df
 
 DOMAIN = 1_000_000
@@ -118,7 +119,8 @@ def knn(
             src = read_pruned(spark, store_path, all_ivs)
         else:
             src = points
-        qmeta = spark.createDataFrame(
+        qmeta = local_df(
+            spark,
             [(q["qid"], q["qx"], q["qy"], q["k"]) for q in pending],
             "qid long, qx long, qy long, k int",
         )
@@ -156,9 +158,7 @@ def knn(
                 still.append(q)
         pending = still
         r *= 4
-    return spark.createDataFrame(
-        rows_out, "qid long, rank int, pid long, x long, y long, d2 long"
-    )
+    return local_df(spark, rows_out, "qid long, rank int, pid long, x long, y long, d2 long")
 
 
 def knn_batch(
@@ -216,9 +216,7 @@ def knn_batch(
         # ADVICE r4: x/y must be LONG to match the non-empty path (the
         # store carries long coords) and sibling knn() — a mismatched
         # empty schema breaks downstream unions/writes.
-        return spark.createDataFrame(
-            [], "qid long, rank int, pid long, x long, y long, d2 long"
-        )
+        return local_df(spark, [], "qid long, rank int, pid long, x long, y long, d2 long")
     kmax = int(kmax_row)
     r = max(64, int(domain * math.sqrt(16.0 * kmax / max(n_points_hint, 1)) / 2))
     ckpt = checkpointer or (lambda df: df.localCheckpoint())

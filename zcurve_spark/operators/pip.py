@@ -22,6 +22,7 @@ from pyspark.sql import types as T
 
 from ..functions.columns import tile_id_col
 from ..plans.decompose import covering_tiles, pick_cover_level
+from ..util import local_df
 
 
 def _pip_kernel(px: np.ndarray, py: np.ndarray, verts: np.ndarray) -> np.ndarray:
@@ -228,7 +229,8 @@ def pip_join(
     )
     result = None
     for level, rows in sorted(by_level.items()):
-        cover = spark.createDataFrame(
+        cover = local_df(
+            spark,
             [(t, pid, s, e if not s else None) for t, pid, e, s in rows],
             cover_schema,
         )

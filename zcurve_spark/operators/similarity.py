@@ -21,6 +21,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..util import local_df
+
 QUANT = 100  # quantization scale; dims*max_val^2*QUANT^2 must stay << 2^63
 
 
@@ -476,9 +478,7 @@ def ivf_topk(
         probed = sorted(range(len(seeds)), key=lambda c: (-dots[c], c))[:nprobe]
         for c in probed:
             probe_rows.append((int(r["qid"]), qv, int(c)))
-    q = emb.sparkSession.createDataFrame(
-        probe_rows, "qid long, qvec array<long>, cell int"
-    )
+    q = local_df(emb.sparkSession, probe_rows, "qid long, qvec array<long>, cell int")
     j = corpus.join(F.broadcast(q), "cell").filter(F.col("vec_id") != F.col("qid"))
     j = j.withColumn("dot", dot_q(F.col("cvec"), F.col("qvec")))
     w = Window.partitionBy("qid").orderBy(F.col("dot").desc(), F.col("vec_id").asc())

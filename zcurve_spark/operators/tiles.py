@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.columns import tile_id_col
+from ..util import local_df
 
 
 def assign_tiles(df: DataFrame, levels=(4, 8, 12), zkey_col: str = "zkey", bits: int = 30) -> DataFrame:
@@ -174,9 +175,7 @@ def raster_assign_pruned(
 
     ivs = [tile_bounds(cid, lvl, bits=bits) for cid, lvl in cells]
     pts = read_pruned(spark, store_path, ivs)
-    raster = spark.createDataFrame(
-        [(int(c), int(l)) for c, l in cells], "cell_id long, level int"
-    )
+    raster = local_df(spark, [(int(c), int(l)) for c, l in cells], "cell_id long, level int")
     return raster_assign(pts, raster, zkey_col=zkey_col, bits=bits)
 
 
@@ -220,9 +219,11 @@ def tile_counts_incremental(
     sid = cur["snapshot_id"]
     state_json = os.path.join(state_dir, "state.json")
     st = None
+    old_data = None  # the dir the current state.json points at, removed after the swing
     if os.path.exists(state_json):
         with open(state_json) as fh:
             st = json.load(fh)
+        old_data = st["data"]
         if st.get("level") != level or st.get("bits") != bits:
             # state for a different tiling (ADVICE r5: bits is written
             # into state.json and changes the tile ids just like level
@@ -255,10 +256,10 @@ def tile_counts_incremental(
         state_json,
         {"snapshot_id": sid, "level": level, "bits": bits, "data": data_rel},
     )
-    if st is not None and st["data"] != data_rel:
+    if old_data is not None and old_data != data_rel:
         import shutil
 
-        shutil.rmtree(os.path.join(state_dir, st["data"]), ignore_errors=True)
+        shutil.rmtree(os.path.join(state_dir, old_data), ignore_errors=True)
     return spark.read.parquet(out_dir)
 
 

@@ -11,6 +11,17 @@ import os
 
 from pyspark.sql import SparkSession
 
+EVENT_LOG_DIR = "/tmp/spark-events"
+
+
+def _event_log_flag(log_dir: str = EVENT_LOG_DIR) -> str:
+    """``spark.eventLog.enabled`` from SPARK_GRAFT_EVENTLOG; when enabled,
+    create the log dir first — Spark refuses to start without it."""
+    flag = os.environ.get("SPARK_GRAFT_EVENTLOG", "false")
+    if flag.strip().lower() not in ("", "0", "false", "no", "off"):
+        os.makedirs(log_dir, exist_ok=True)
+    return flag
+
 
 def get_spark(
     app: str = "zcurve_spark",
@@ -79,7 +90,7 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_DRIVER_JAVA_OPTS", ""),
         )
         .config("spark.ui.enabled", "false")
-        .config("spark.eventLog.enabled", os.environ.get("SPARK_GRAFT_EVENTLOG", "false"))
-        .config("spark.eventLog.dir", "/tmp/spark-events")
+        .config("spark.eventLog.enabled", _event_log_flag())
+        .config("spark.eventLog.dir", EVENT_LOG_DIR)
         .getOrCreate()
     )

@@ -30,6 +30,8 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..util import local_df
+
 MANIFEST_NAME = "_zcurve_manifest.json"
 
 
@@ -241,7 +243,7 @@ def read_pruned_df(spark: SparkSession, path: str, ivs_df: DataFrame) -> DataFra
         for f in manifest["files"]
         if f["zkey_min"] is not None
     ]
-    fdf = spark.createDataFrame(frows, "file string, kmin long, kmax long")
+    fdf = local_df(spark, frows, "file string, kmin long, kmax long")
     names = [
         r["file"]
         for r in ivs_df.select("lo", "hi")

@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.columns import zkey2_col, zkey3_col
-from ..util import fan_out
+from ..util import fan_out, local_df
 
 DOMAIN = 1_000_000  # coords in [0, 10^6), matching gendata.awk
 BITS = 20  # 10^6 < 2^20
@@ -103,7 +103,7 @@ def boxes_df(spark: SparkSession, boxes: list[dict]) -> DataFrame:
         + ", "
         + ", ".join(f"{d}1 long" for d in dims)
     )
-    return spark.createDataFrame(rows, schema)
+    return local_df(spark, rows, schema)
 
 
 def boxes_values_sql(boxes: list[dict]) -> str:

@@ -56,6 +56,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..util import local_df
 from .manifest import (
     MANIFEST_NAME,
     _footer_stats,
@@ -472,7 +473,7 @@ class SnapshotStore:
         ranged = [(n, lo, hi) for n, lo, hi in ranges if lo is not None and hi is not None]
         if key == zc and ranged:
             blind = [n for n, lo, hi in ranges if lo is None or hi is None]
-            rdf = self.spark.createDataFrame(ranged, ["_file", "_kmin", "_kmax"])
+            rdf = local_df(self.spark, ranged, "_file string, _kmin long, _kmax long")
             touched_rows = (
                 delta.select(F.col(key).alias("_k"))
                 .join(

@@ -2,7 +2,30 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from typing import Iterable, Sequence
+
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import _parse_datatype_string
+
+
+def local_df(spark: SparkSession, rows: Iterable[Sequence], schema_ddl: str) -> DataFrame:
+    """Driver rows (tuples in `schema_ddl` column order) as a DataFrame.
+
+    The rows travel as one Arrow table and Spark plans them as a JVM
+    ``LocalTableScan``.  ``createDataFrame(list, ddl)`` instead pickles
+    them into a Python RDD (``Scan ExistingRDD``) that Python workers
+    unpickle again for every consumer in the plan — for a 32-row build
+    side that costs more than the join it feeds.
+    """
+    schema = _parse_datatype_string(schema_ddl)
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)], schema=arrow_schema
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
