@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
+from hypothesis import HealthCheck, example, given, settings
+from hypothesis import strategies as st
 
 from zcurve_spark.functions import curvekey as ck
 
@@ -173,6 +175,110 @@ class TestColumnKernelsMatchNumpy:
         ).toPandas()
         expect = ck.zkey2(x >> np.uint64(s), y >> np.uint64(s))
         assert (out.t.to_numpy(np.uint64) == expect).all()
+
+
+def _counted_round_trips(spark, monkeypatch, build) -> int:
+    """py4j commands the driver sends while `build()` makes one Column
+    (second call: the first warms PySpark's per-process caches)."""
+    client = spark.sparkContext._gateway._gateway_client
+    sent = [0]
+    send = client.send_command
+
+    def counting(*args, **kwargs):
+        sent[0] += 1
+        return send(*args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    build()
+    before = sent[0]
+    build()
+    return sent[0] - before
+
+
+class TestColumnRoundTripBudget:
+    """Building a key Column is driver planning cost paid on every op:
+    each LUT literal crosses py4j in one call (``F.lit(list)`` takes
+    several per element, about 2,800 round trips per zkey2_col), and no
+    per-call call-site capture runs."""
+
+    def test_zkey2_col(self, spark, monkeypatch):
+        from zcurve_spark.functions import columns as C
+
+        assert _counted_round_trips(spark, monkeypatch, lambda: C.zkey2_col("x", "y")) <= 300
+
+    def test_zkey3_col(self, spark, monkeypatch):
+        from zcurve_spark.functions import columns as C
+
+        assert _counted_round_trips(spark, monkeypatch, lambda: C.zkey3_col("x", "y", "z")) <= 300
+
+    def test_unzkey2_x_col(self, spark, monkeypatch):
+        from zcurve_spark.functions import columns as C
+
+        assert _counted_round_trips(spark, monkeypatch, lambda: C.unzkey2_x_col("k")) <= 200
+
+
+@st.composite
+def _coords(draw, bits: int, dims: int, max_size: int = 12):
+    """Lists of coordinate tuples in [0, 2^bits), biased to the domain edges."""
+    edge = st.sampled_from([0, 1, (1 << (bits - 1)) - 1, 1 << (bits - 1), (1 << bits) - 2, (1 << bits) - 1])
+    c = st.one_of(edge, st.integers(0, (1 << bits) - 1))
+    return draw(st.lists(st.tuples(*[c] * dims), min_size=1, max_size=max_size))
+
+
+_HYP = settings(max_examples=25, deadline=None, suppress_health_check=[HealthCheck.too_slow])
+
+
+class TestColumnEncodersAtDomainEdges:
+    """Column encoders equal the numpy kernels over the whole coordinate
+    domain, edges included: 0 and 2^31-1 (zkey2), 2^21-1 (zkey3), tile
+    levels 0 and `bits`."""
+
+    @_HYP
+    @given(pts=_coords(31, 2))
+    @example(pts=[(0, 0), ((1 << 31) - 1, (1 << 31) - 1), ((1 << 31) - 1, 0), (0, (1 << 31) - 1)])
+    def test_zkey2_and_decode(self, spark, pts):
+        from zcurve_spark.functions import columns as C
+        from zcurve_spark.util import local_df
+
+        x, y = (np.array(v, dtype=np.uint64) for v in zip(*pts))
+        rows = local_df(spark, pts, "x long, y long").select(
+            C.zkey2_col("x", "y").alias("k"),
+            C.unzkey2_x_col(C.zkey2_col("x", "y")).alias("xd"),
+            C.unzkey2_y_col(C.zkey2_col("x", "y")).alias("yd"),
+        ).collect()
+        k = ck.zkey2(x, y)
+        assert [r.k for r in rows] == [int(v) for v in k]
+        assert all(0 <= r.k < 2**62 for r in rows)
+        assert [(r.xd, r.yd) for r in rows] == [tuple(p) for p in pts]
+
+    @_HYP
+    @given(pts=_coords(21, 3))
+    @example(pts=[(0, 0, 0), ((1 << 21) - 1,) * 3, ((1 << 21) - 1, 0, 0)])
+    def test_zkey3(self, spark, pts):
+        from zcurve_spark.functions import columns as C
+        from zcurve_spark.util import local_df
+
+        x, y, z = (np.array(v, dtype=np.uint64) for v in zip(*pts))
+        rows = local_df(spark, pts, "x long, y long, z long").select(
+            C.zkey3_col("x", "y", "z").alias("k")
+        ).collect()
+        assert [r.k for r in rows] == [int(v) for v in ck.zkey3(x, y, z)]
+
+    @_HYP
+    @given(data=st.data(), bits=st.integers(1, 31))
+    def test_tile_id_levels(self, spark, data, bits):
+        from zcurve_spark.functions import columns as C
+        from zcurve_spark.util import local_df
+
+        pts = data.draw(_coords(bits, 2))
+        levels = sorted({0, bits, data.draw(st.integers(0, bits))})
+        x, y = (np.array(v, dtype=np.uint64) for v in zip(*pts))
+        rows = local_df(spark, pts, "x long, y long").select(
+            *[C.tile_id_col(C.zkey2_col("x", "y"), lv, bits=bits).alias(f"t{lv}") for lv in levels]
+        ).collect()
+        for lv in levels:
+            s = np.uint64(bits - lv)
+            assert [r[f"t{lv}"] for r in rows] == [int(v) for v in ck.zkey2(x >> s, y >> s)]
 
 
 class TestHilbert3:

@@ -21,3 +21,19 @@ def test_event_log_off_creates_nothing(monkeypatch, tmp_path):
     monkeypatch.setenv("SPARK_GRAFT_EVENTLOG", "false")
     assert _event_log_flag(str(log_dir)) == "false"
     assert not log_dir.exists()
+
+
+def test_session_turns_off_call_site_capture(spark):
+    """Per-Column-call stack capture is off for every session we build."""
+    from pyspark.errors.utils import is_debugging_enabled
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    assert is_debugging_enabled() is False
+
+
+def test_dropped_knobs_keep_spark_defaults(spark):
+    """The io codec and file split size are Spark's defaults, unset by us."""
+    sc = spark.sparkContext
+    codec = sc._jvm.org.apache.spark.io.CompressionCodec.getCodecName(sc._jsc.sc().conf())
+    assert codec == "lz4"
+    assert spark.conf.get("spark.sql.files.maxPartitionBytes") == "134217728b"

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from ..util import array_lit
+
 _SPREAD2_STEPS = (
     (16, 0x0000FFFF0000FFFF),
     (8, 0x00FF00FF00FF00FF),
@@ -71,7 +73,7 @@ def spread2_col(v) -> Column:
     leaf, so the expression tree is linear however Catalyst inlines it.
     """
     v = _as_col(v).cast("long")
-    lut = F.lit(_LUT2)
+    lut = array_lit(_LUT2)
     out = None
     for k in range(4):
         byte = F.shiftrightunsigned(v, 8 * k).bitwiseAND(F.lit(0xFF))
@@ -105,7 +107,7 @@ def compact2_col(v) -> Column:
     """Inverse spread: gather even bits of a long column (decode helper).
     Eight byte-LUT lookups — flat tree, same rationale as spread2_col."""
     v = _as_col(v).cast("long")
-    lut = F.lit(_LUT2_INV)
+    lut = array_lit(_LUT2_INV)
     out = None
     for k in range(8):
         byte = F.shiftrightunsigned(v, 8 * k).bitwiseAND(F.lit(0xFF))
@@ -127,7 +129,7 @@ def spread3_col(v) -> Column:
     """Bit-spread a <2^21 integer column: bit i -> bit 3i (JVM-side).
     Three byte-LUT lookups — flat tree, same rationale as spread2_col."""
     v = _as_col(v).cast("long").bitwiseAND(F.lit(0x1FFFFF))
-    lut = F.lit(_LUT3)
+    lut = array_lit(_LUT3)
     out = None
     for k in range(3):
         byte = F.shiftrightunsigned(v, 8 * k).bitwiseAND(F.lit(0xFF))

@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 MERSENNE = (1 << 31) - 1
 
 
-from ..util import fan_out
+from ..util import array_lit, fan_out
 
 
 def exact_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -152,8 +152,8 @@ def minhash_signature(grams_col, n_hashes: int = 32):
     # n_hashes times would re-run xxhash64 over every shingle each time.
     # Instead: ONE aggregate pass — hash each shingle once, update all
     # n_hashes running minima via zip_with.
-    a_consts = F.lit([2 * i + 1 for i in range(n_hashes)])
-    b_consts = F.lit([0x9E3779B9 * (i + 1) & ((1 << 30) - 1) for i in range(n_hashes)])
+    a_consts = array_lit([2 * i + 1 for i in range(n_hashes)])
+    b_consts = array_lit([0x9E3779B9 * (i + 1) & ((1 << 30) - 1) for i in range(n_hashes)])
     init = F.array_repeat(F.lit(MERSENNE).cast("long"), n_hashes)
     # hash once per shingle; inside the aggregate, h is a *bound lambda
     # variable* (a value), so the n_hashes references don't re-hash.
@@ -446,7 +446,7 @@ def simhash_col(text_col, bits: int = SIMHASH_BITS):
     # unrolled exprs — same planning-cost rationale as minhash_signature.
     hashes = F.transform(tokens, lambda t: F.xxhash64(t))
     zeros = F.array_repeat(F.lit(0).cast("long"), bits)
-    weights = F.lit([1 << j for j in range(bits)])
+    weights = array_lit([1 << j for j in range(bits)])
 
     def step(acc, h):
         pm = F.transform(

@@ -90,13 +90,17 @@ def with_span_geo(spans: DataFrame, bits: int = BITS) -> DataFrame:
     n = 1 << bits
     h1 = (F.col("_doc_num") * 2654435761 + F.col("span_idx") * 97 + 12345) % n
     h2 = (F.col("_doc_num") * 1013904223 + F.col("span_idx") * 31 + 54321) % n
-    out = spans.withColumn("qx", h1.cast("long")).withColumn("qy", h2.cast("long"))
-    out = out.withColumn("lon", F.col("qx") / F.lit(float(n)) * 360.0 - 180.0)
-    out = out.withColumn("lat", F.col("qy") / F.lit(float(n)) * 180.0 - 90.0)
-    out = out.withColumn("zkey", zkey2_col("qx", "qy"))
-    for level in (4, 8, 12):
-        out = out.withColumn(f"tile_l{level}", tile_id_col("zkey", level, bits=bits))
-    return out
+    # three projections, one analysis each (a withColumn per column
+    # re-analyzes the whole plan); dict order is the column order
+    out = spans.withColumns({"qx": h1.cast("long"), "qy": h2.cast("long")})
+    out = out.withColumns({
+        "lon": F.col("qx") / F.lit(float(n)) * 360.0 - 180.0,
+        "lat": F.col("qy") / F.lit(float(n)) * 180.0 - 90.0,
+        "zkey": zkey2_col("qx", "qy"),
+    })
+    return out.withColumns(
+        {f"tile_l{level}": tile_id_col("zkey", level, bits=bits) for level in (4, 8, 12)}
+    )
 
 
 def reassemble(spans: DataFrame) -> DataFrame:

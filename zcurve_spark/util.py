@@ -5,7 +5,8 @@ from __future__ import annotations
 from typing import Iterable, Sequence
 
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import _parse_datatype_string
 
@@ -26,6 +27,19 @@ def local_df(spark: SparkSession, rows: Iterable[Sequence], schema_ddl: str) -> 
         [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)], schema=arrow_schema
     )
     return spark.createDataFrame(table, schema)
+
+
+def array_lit(values: Iterable[int]) -> Column:
+    """Literal integer array as ONE JVM call.
+
+    ``F.lit(list)`` expands to ``array(lit(v0), lit(v1), ...)``: several
+    py4j round trips per element (about 1,300 for one 256-entry byte
+    LUT).  Parsing ``array(v0, v1, ...)``
+    yields the same ``CreateArray`` of int/bigint literals (same element
+    type, widened to bigint when any value needs it; same nullability),
+    which ConstantFolding folds to one array literal just the same.
+    """
+    return F.expr(f"array({', '.join(str(int(v)) for v in values)})")
 
 
 def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
